@@ -3,10 +3,11 @@
   cosine_topk_native  — exact brute force as pure Catalyst higher-order
                         functions (zip_with/aggregate dot product) +
                         window re-rank. Oracle-matchable in SQL.
-  cosine_topk_fast    — exact brute force with the corpus broadcast as
-                        one numpy matrix; each Arrow batch of queries
-                        does a single matmul + argpartition. The scale
-                        path for broadcastable corpora.
+  cosine_topk_fast    — the shared exact top-k of `topk.py` under the
+                        cosine score `_cosine_score`, corpus broadcast
+                        as one numpy matrix; the scale path.
+  cosine_topk_blocked — the same kernel hash-blocked in a cogroup, for
+                        corpora too large to broadcast.
   ivf_topk            — IVF (inverted-file) ANN: corpus assigned to
                         nearest of C centroids (k-means on a driver
                         sample); queries probe the top-`nprobe`
@@ -18,13 +19,14 @@ All variants break ties by ascending corpus id → deterministic output.
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..session import tracked_broadcast
+from . import topk as T
 
 
 def _as_double(col):
@@ -32,7 +34,7 @@ def _as_double(col):
 
 
 def _drop_null_vectors(queries, corpus, q_vec, c_vec):
-    """Family-uniform null-vector semantics (one place, four callers):
+    """Family-uniform null-vector semantics (one place, every path):
     a null embedding has no cosine against anything, so such rows can
     never appear in the output — drop them at the boundary. Without
     this, `cosine_topk_native` emitted null-cosine rank rows while the
@@ -78,12 +80,59 @@ def cosine_topk_native(
     )
 
 
-def _collect_matrix(df: DataFrame, id_col: str, vec_col: str) -> tuple[np.ndarray, np.ndarray]:
-    pdf = df.select(id_col, vec_col).toPandas()
-    ids = pdf[id_col].to_numpy()
-    M = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-    order = np.argsort(ids)
-    return ids[order], M[order]
+def _unit_rows(X: np.ndarray) -> np.ndarray:
+    X = X.astype(np.float64)
+    return X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+
+
+def _cosine_build(cpdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """Corpus rows (_ek, _ev) → ids ascending and unit rows in that
+    order; the sorted ids let the self mask use `searchsorted`."""
+    ids = cpdf["_ek"].to_numpy()
+    order = np.argsort(ids, kind="stable")
+    return ids[order], _unit_rows(np.vstack(cpdf["_ev"].to_numpy())[order])
+
+
+def _cosine_score(qpdf: pd.DataFrame, corpus: tuple, exclude_self: bool) -> tuple:
+    """The cosine score for `topk.topk_block`, as (score, cost, margin).
+
+    Scores are rounded to 6 dp before ranking, so the (cosine desc,
+    id asc) order is the one `cosine_topk_native` and the SQL oracle
+    produce. Selection and cost are the same float64 numbers, so the
+    margin is 0. With `exclude_self`, a query's own corpus row scores
+    -inf and is never returned."""
+    ids, Mn = corpus
+    qids = qpdf["_qk"].to_numpy()
+    Qn = _unit_rows(np.vstack(qpdf["_qv"].to_numpy()))
+
+    def score(lo: int, hi: int) -> np.ndarray:
+        S = np.round(Qn[lo:hi] @ Mn.T, 6)
+        if exclude_self:
+            q = qids[lo:hi]
+            pos = np.minimum(np.searchsorted(ids, q), len(ids) - 1)
+            hit = np.flatnonzero(ids[pos] == q)
+            S[hit, pos[hit]] = -np.inf
+        return S
+
+    def cost(S, lo: int, rows: np.ndarray, cols: np.ndarray) -> np.ndarray:
+        return -S[rows[:, None], cols]
+
+    return score, cost, 0.0
+
+
+def _exact_topk(wrapper, queries, corpus, k, q_id, q_vec, c_id, c_vec, exclude_self, **kw):
+    """Null drop, projection and one call into `topk`'s `wrapper`."""
+    queries, corpus = _drop_null_vectors(queries, corpus, q_vec, c_vec)
+    out = wrapper(
+        queries.select(F.col(q_id).alias("_qk"), F.col(q_vec).alias("_qv")),
+        corpus.select(F.col(c_id).alias("_ek"), F.col(c_vec).alias("_ev")),
+        k, T.Metric(_cosine_build, partial(_cosine_score, exclude_self=exclude_self),
+                    "cosine", descending=True),
+        **kw,
+    )
+    return out.select(
+        F.col("_qk").alias(q_id), F.col("_ek").alias("neighbor_id"), "cosine", "rank"
+    )
 
 
 def cosine_topk_fast(
@@ -98,105 +147,25 @@ def cosine_topk_fast(
     max_inline_corpus: int = 2_000_000,
     max_inline_bytes: int = 512 * 2**20,
 ) -> DataFrame:
-    """Exact top-k with the corpus as a broadcast numpy matrix: one
-    matmul per Arrow batch; the fact side streams, nothing shuffles.
-    The matrix ships via SparkContext.broadcast — once per executor,
-    not once per task as a closure would.
+    """Exact top-k with the corpus as a broadcast numpy matrix, via
+    `topk.broadcast_topk`: the fact side streams, nothing shuffles.
 
-    Guard convention (shared with ``knn.knn_bruteforce``): count-guard
-    BEFORE any driver pull. The inline budget is BYTES, not rows — the
-    driver cost of a corpus matrix is rows × dim × 8 B, so a row cap
-    alone is dimension-blind (2M rows of 128-d float64 ≈ 2 GB, nothing
-    like knn's ~50 MB at the same row count). A bounded probe (max
-    size over the first 64 rows) reads the vector width, the row
-    budget becomes
-    min(max_inline_corpus, max_inline_bytes // (dim × 8)), and a
-    limit(budget+1).count() decides the path — the count short-circuits
-    after budget+1 rows and pulls no data to the driver. This costs one
-    bounded extra lineage evaluation vs the old collect-once-and-discard
-    approach; chosen because the failure mode it removes (a multi-GB
-    driver materialization thrown away on overflow) is catastrophic
-    while the cost it adds is a truncated scan.
-
-    On overflow: `cosine_topk_blocked` — block-partitioned exact top-k
-    with NO driver collect and NO full-corpus broadcast — same output,
-    same tie-breaks."""
-    queries, corpus = _drop_null_vectors(queries, corpus, q_vec, c_vec)
-    out_schema = f"{q_id} long, neighbor_id long, cosine double, rank int"
-    # ONE guard job (round-5 verdict: the separate 64-row width-probe
-    # collect + overflow count cost two driver jobs per call — 0.32 s →
-    # 0.42 s on the bench query). The size projection is pushed below
-    # the limit, so only ints flow: count and max width come out of the
-    # same bounded scan, which short-circuits after max_inline_corpus+1
-    # rows and pulls one row to the driver. The width max now covers
-    # the WHOLE probed window (not just 64 rows), so a corpus whose
-    # wide rows hide past row 64 can no longer under-budget the inline
-    # collect. Overflow logic is unchanged: n is capped at
-    # max_inline_corpus+1 ≥ row_budget+1, so n > row_budget still
-    # fires exactly when the true count exceeds the byte-derived budget.
-    probe = (
-        corpus.select(F.size(F.col(c_vec)).alias("d"))
-        .limit(max_inline_corpus + 1)
-        .agg(F.count(F.lit(1)).alias("n"), F.max("d").alias("dmax"))
-        .first()
+    The inline budget is BYTES as well as rows: the driver cost of a
+    corpus matrix is rows × dim × 8 B, so a row cap alone is
+    dimension-blind (2M rows of 128-d float64 ≈ 2 GB, nothing like
+    knn's ~50 MB at the same row count). The bounded probe reads the
+    widest vector in the rows it counts, and the row budget is
+    min(max_inline_corpus, max_inline_bytes // (dim × 8)). Over budget
+    the corpus takes the blocked cogroup plan with NO driver collect
+    and NO full-corpus broadcast — same output, same tie-breaks."""
+    return _exact_topk(
+        T.broadcast_topk, queries, corpus, k, q_id, q_vec, c_id, c_vec, exclude_self,
+        slot="ann_corpus_matrix",
+        max_rows=max_inline_corpus,
+        # clamp the width at 1: an all-empty-array corpus reads size 0
+        row_bytes=F.greatest(F.size("_ev"), F.lit(1)) * 8,
+        max_bytes=max_inline_bytes,
     )
-    if not probe["n"]:
-        # corpus empty after the null drop: no row can rank against
-        # anything — return the empty result the native/blocked twins
-        # produce instead of feeding np.vstack an empty array
-        return queries.sparkSession.createDataFrame([], out_schema)
-    # clamp: an all-empty-array window reads dmax=0 — budget on dim 1
-    # rather than dividing by zero (round-5 advice)
-    dim = max(1, int(probe["dmax"]))
-    row_budget = min(max_inline_corpus, max(1, max_inline_bytes // (dim * 8)))
-    if probe["n"] > row_budget:
-        return cosine_topk_blocked(
-            queries, corpus, k,
-            q_id=q_id, q_vec=q_vec, c_id=c_id, c_vec=c_vec,
-            exclude_self=exclude_self,
-            # block size bounds TASK memory, not driver memory — cap it
-            # well under the driver-collect guard
-            block_rows=min(row_budget, 65536),
-        )
-    # limit() keeps the transfer hard-bounded even if the lineage is
-    # nondeterministic and grew between the count job and this one
-    ids, M = _collect_matrix(corpus.limit(row_budget), c_id, c_vec)
-    Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-    bc = tracked_broadcast(
-        queries.sparkSession.sparkContext, (ids, Mn), "ann_corpus_matrix"
-    )
-
-    def topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, Mn = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            Q = np.vstack(pdf[q_vec].to_numpy()).astype(np.float64)
-            Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
-            # round to 6 before ranking so tie-breaks (rounded cosine
-            # desc, id asc) match the native HOF twin and the SQL oracle
-            S = np.round(Qn @ Mn.T, 6)  # (batch, corpus)
-            qids = pdf[q_id].to_numpy()
-            if exclude_self:
-                for r, qid in enumerate(qids):
-                    hit = np.searchsorted(ids, qid)
-                    if hit < len(ids) and ids[hit] == qid:
-                        S[r, hit] = -np.inf
-            kk = min(k, S.shape[1])
-            # argpartition then exact sort of the head; ties → smaller id
-            part = np.argpartition(-S, kk - 1, axis=1)[:, :kk]
-            rows = {q_id: [], "neighbor_id": [], "cosine": [], "rank": []}
-            for r in range(len(qids)):
-                cand = part[r]
-                order = np.lexsort((ids[cand], -S[r, cand]))
-                sel = cand[order]
-                rows[q_id].extend([qids[r]] * kk)
-                rows["neighbor_id"].extend(ids[sel])
-                rows["cosine"].extend(np.round(S[r, sel], 6))
-                rows["rank"].extend(range(1, kk + 1))
-            yield pd.DataFrame(rows)
-
-    return queries.select(q_id, q_vec).mapInPandas(topk, out_schema)
 
 
 def cosine_topk_blocked(
@@ -210,105 +179,14 @@ def cosine_topk_blocked(
     exclude_self: bool = True,
     block_rows: int = 65536,
 ) -> DataFrame:
-    """Exact top-k for corpora too large to broadcast or collect:
-    block nested loop as a cogroup.
-
-    Both sides are hash-blocked (xxhash64(id) % n_blocks — deterministic,
-    uniform), each side replicated across the OTHER side's block ids, and
-    every (qblock, cblock) pair meets exactly once in a
-    ``cogroup().applyInPandas`` task that computes a bounded matmul and
-    emits a per-query LOCAL top-k. A window over qid then merges block
-    candidates into the global top-k — exact, because each block's local
-    top-k is a superset of that block's contribution to the global
-    answer. Nothing is collected to the driver and no full-corpus
-    broadcast exists; shuffle volume is the textbook block-nested-loop
-    n_qblocks·|C| + n_cblocks·|Q|, which is the honest cost of EXACT
-    search at scale (the sublinear path is `ivf_topk`).
-
-    Per-task memory is one query block + one corpus block + a
-    chunk×block score matrix (queries are chunked inside the task so the
-    scores stay ≤ ~256 MB regardless of `block_rows`).
-
-    Same rounding (6 dp before ranking) and tie-breaks (cosine desc,
-    cid asc) as `cosine_topk_fast`/`cosine_topk_native` — byte-identical
-    output."""
-    queries, corpus = _drop_null_vectors(queries, corpus, q_vec, c_vec)
-    n_c = corpus.count()
-    n_q = queries.count()
-    n_cblk = max(1, -(-n_c // block_rows))
-    n_qblk = max(1, -(-n_q // block_rows))
-
-    qt = queries.schema[q_id].dataType.simpleString()
-    ct = corpus.schema[c_id].dataType.simpleString()
-
-    qb = queries.select(
-        F.col(q_id).alias("qid"), _as_double(q_vec).alias("qv")
-    ).withColumn("qblk", F.pmod(F.xxhash64("qid"), F.lit(n_qblk)).cast("int"))
-    cb = corpus.select(
-        F.col(c_id).alias("cid"), _as_double(c_vec).alias("cv")
-    ).withColumn("cblk", F.pmod(F.xxhash64("cid"), F.lit(n_cblk)).cast("int"))
-
-    # replicate each side across the other's block ids with a narrow
-    # explode (no join node, no broadcast) so cogroup keys cover the
-    # full cross of block pairs
-    qrep = qb.withColumn(
-        "cblk",
-        F.explode(F.sequence(F.lit(0).cast("int"), F.lit(n_cblk - 1).cast("int"))),
-    )
-    crep = cb.withColumn(
-        "qblk",
-        F.explode(F.sequence(F.lit(0).cast("int"), F.lit(n_qblk - 1).cast("int"))),
-    )
-
-    score_budget = 32 * 1024 * 1024  # float64 cells ≈ 256 MB
-
-    def local_topk(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame({"qid": [], "cid": [], "cosine": []})
-        M = np.vstack(right["cv"].to_numpy()).astype(np.float64)
-        Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-        cids = right["cid"].to_numpy()
-        qids = left["qid"].to_numpy()
-        Q = np.vstack(left["qv"].to_numpy()).astype(np.float64)
-        Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
-        kk = min(k, len(cids))
-        cid_pos = {v: i for i, v in enumerate(cids)} if exclude_self else None
-        chunk = max(1, score_budget // max(1, len(cids)))
-        out_q, out_c, out_s = [], [], []
-        for lo in range(0, len(qids), chunk):
-            hi = min(lo + chunk, len(qids))
-            S = np.round(Qn[lo:hi] @ Mn.T, 6)
-            if exclude_self:
-                for r in range(lo, hi):
-                    p = cid_pos.get(qids[r])
-                    if p is not None:
-                        S[r - lo, p] = -np.inf
-            part = (
-                np.argpartition(-S, kk - 1, axis=1)[:, :kk]
-                if kk < S.shape[1]
-                else np.tile(np.arange(S.shape[1]), (S.shape[0], 1))
-            )
-            for r in range(hi - lo):
-                cand = part[r]
-                order = np.lexsort((cids[cand], -S[r, cand]))
-                sel = cand[order]
-                keep = S[r, sel] > -np.inf
-                sel = sel[keep]
-                out_q.extend([qids[lo + r]] * len(sel))
-                out_c.extend(cids[sel])
-                out_s.extend(S[r, sel])
-        return pd.DataFrame({"qid": out_q, "cid": out_c, "cosine": out_s})
-
-    local = (
-        qrep.groupBy("qblk", "cblk")
-        .cogroup(crep.groupBy("qblk", "cblk"))
-        .applyInPandas(local_topk, f"qid {qt}, cid {ct}, cosine double")
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("cid"))
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("qid").alias(q_id), F.col("cid").alias("neighbor_id"), "cosine", "rank")
+    """Exact top-k for corpora too large to broadcast or collect: the
+    block nested loop of `topk.blocked_topk`, `block_rows` rows per hash
+    block. Nothing is collected to the driver; the sublinear path is
+    `ivf_topk`. Same rounding and tie-breaks (cosine desc, id asc) as
+    `cosine_topk_fast` and `cosine_topk_native`."""
+    return _exact_topk(
+        T.blocked_topk, queries, corpus, k, q_id, q_vec, c_id, c_vec, exclude_self,
+        block_rows=block_rows,
     )
 
 

@@ -6,6 +6,7 @@ from osm_wikipedia_tag_validator_spark.datagen import world as W
 from osm_wikipedia_tag_validator_spark.functions.geometry import haversine_km
 from osm_wikipedia_tag_validator_spark.operators import ann as ANN
 from osm_wikipedia_tag_validator_spark.operators import knn as KNN
+from osm_wikipedia_tag_validator_spark.operators import topk as T
 
 
 def _dense_entities(spark, n=500):
@@ -247,14 +248,14 @@ def test_cosine_topk_fast_byte_budget_is_dimension_aware(spark, monkeypatch):
     q = df.filter(F.col("vec_id") < 8)
 
     pulled = []
-    real = ANN._collect_matrix
+    real = T._collect
 
-    def spy(corpus, c_id, c_vec):
-        ids, M = real(corpus, c_id, c_vec)
-        pulled.append(len(ids))
-        return ids, M
+    def spy(side, budget):
+        pdf = real(side, budget)
+        pulled.append(len(pdf))
+        return pdf
 
-    monkeypatch.setattr(ANN, "_collect_matrix", spy)
+    monkeypatch.setattr(T, "_collect", spy)
     # byte budget allows 40/ (64*8) = 80... use 20*64*8 bytes → 20 rows
     # < 60 corpus rows, while the ROW cap (1000) would have let it inline
     got = (
@@ -275,7 +276,7 @@ def test_cosine_topk_fast_byte_budget_is_dimension_aware(spark, monkeypatch):
     assert pulled == [60]
 
 
-def test_cosine_topk_fast_null_first_row_cannot_defeat_byte_budget(spark):
+def test_cosine_topk_fast_null_first_row_cannot_defeat_byte_budget(spark, monkeypatch):
     """Regression (round-5 review): the vector-width probe read ONE row
     with first(); a NULL embedding there read dim=NULL -> 1, inflating
     the byte-derived row budget by the true dimension factor and taking
@@ -300,21 +301,15 @@ def test_cosine_topk_fast_null_first_row_cannot_defeat_byte_budget(spark):
     # byte budget admits 20 rows at the TRUE dim (8 × 8 B × 20 = 1280);
     # a dim=1 misread would admit 160 rows and go inline
     routed = {}
-    import osm_wikipedia_tag_validator_spark.operators.ann as ann_mod
-
-    real_blocked = ann_mod.cosine_topk_blocked
+    real_blocked = T.blocked_topk
 
     def spy(*a, **kw):
         routed["blocked"] = True
         return real_blocked(*a, **kw)
 
-    ann_mod.cosine_topk_blocked = spy
-    try:
-        out = ANN.cosine_topk_fast(q, df, k=3, max_inline_bytes=1280)
-        n = out.count()
-        assert n > 0
-    finally:
-        ann_mod.cosine_topk_blocked = real_blocked
+    monkeypatch.setattr(T, "blocked_topk", spy)
+    out = ANN.cosine_topk_fast(q, df, k=3, max_inline_bytes=1280)
+    assert out.count() > 0
     assert routed.get("blocked"), "over-budget corpus took the inline path"
 
 
@@ -457,13 +452,15 @@ def test_knn_bruteforce_exact_under_duplicate_coordinates(spark):
 
 
 def test_knn_topk_block_fuzz_regimes():
-    """Kernel-level fuzz of `_topk_block` (the GEMM selection + float32
-    certificate + exact fallback) against a per-row numpy brute force,
-    BIT-EXACT on (q_key, e_key, dist, rank). Eight regimes rotate
-    through the geometries that stress the selection boundary: uniform,
-    dense ~200 m cluster, duplicate-coordinate groups, all-identical
-    entities, polar, antipodal, query==entity, and near-tie rings at
-    1e-12-degree separation. Seeded; no Spark needed."""
+    """Kernel-level fuzz of the shared `topk.topk_block` under the kNN
+    score `knn._chord_score` (the GEMM selection + float32 certificate +
+    exact fallback) against a per-row numpy brute force, BIT-EXACT on
+    (q_key, e_key, dist, rank). Eight regimes rotate through the
+    geometries that stress the selection boundary: uniform, dense
+    ~200 m cluster, duplicate-coordinate groups, all-identical
+    entities, polar, exact antipodes of the queries (dot = −1), query ==
+    entity, and near-tie rings at 1e-12-degree separation. Seeded; no
+    Spark needed."""
     rng = np.random.default_rng(20260822)
 
     def brute(qk, qlon, qlat, ek, elon, elat, k):
@@ -503,8 +500,8 @@ def test_knn_topk_block_fuzz_regimes():
             elon, elat = rng.uniform(-180, 180, ne), rng.uniform(-90, 90, ne)
         elif regime == 5:
             qlon, qlat = rng.uniform(-180, 180, nq), rng.uniform(-5, 5, nq)
-            elon = (qlon[rng.integers(0, nq, ne)] + 180) % 360 - 180
-            elat = -rng.uniform(-5, 5, ne)
+            idx = rng.integers(0, nq, ne)
+            elon, elat = qlon[idx] % 360 - 180, -qlat[idx]
         elif regime == 6:
             elon, elat = rng.uniform(-180, 180, ne), rng.uniform(-85, 85, ne)
             idx = rng.integers(0, ne, nq)
@@ -516,7 +513,133 @@ def test_knn_topk_block_fuzz_regimes():
             elon, elat = 10.0 + r * np.cos(ang), 45.0 + r * np.sin(ang)
         qk = np.arange(nq, dtype=np.int64)
         ek = rng.permutation(ne).astype(np.int64)
-        oq, oe, od, orr = KNN._topk_block(qk, qlon, qlat, ek, elon, elat, k)
-        got = sorted(zip(oq.tolist(), oe.tolist(), od.tolist(), orr.tolist()))
+        ents = KNN._knn_build(pd.DataFrame({"_ek": ek, "_e_lon": elon, "_e_lat": elat}))
+        qpdf = pd.DataFrame({"_q_lon": qlon, "_q_lat": qlat})
+        qi, ei, d, r = T.topk_block(nq, ek, k, *KNN._chord_score(qpdf, ents))
+        got = sorted(zip(qk[qi].tolist(), ek[ei].tolist(), d.tolist(), r.tolist()))
         exp = brute(qk, qlon, qlat, ek, elon, elat, k)
         assert got == exp, f"trial {trial} regime {regime} nq={nq} ne={ne} k={k}"
+
+
+def test_knn_kring_max_ring_exit_is_exact(spark):
+    """Queries still unconverged at the ring cap get the exact answer,
+    not a best-effort one. max_ring=initial_ring on a fine grid leaves
+    queries with fewer than k ring-1 candidates, some with none at all
+    (asserted below), and the result must still equal brute force."""
+    from osm_wikipedia_tag_validator_spark.functions import cells as C
+
+    ents, epdf = _dense_entities(spark)
+    qs, qpdf = _queries(spark, n=40)
+    res, k = 8, 3
+    qx, qy = C.cell_xy(qpdf["lon"].to_numpy(), qpdf["lat"].to_numpy(), res)
+    ex, ey = C.cell_xy(epdf["lon"].to_numpy(), epdf["lat"].to_numpy(), res)
+    in_ring = (
+        (np.abs(qx[:, None].astype(np.int64) - ex[None, :]) <= 1)
+        & (np.abs(qy[:, None].astype(np.int64) - ey[None, :]) <= 1)
+    ).sum(axis=1)
+    assert (in_ring == 0).any() and (in_ring < k).sum() > 1
+    got = KNN.knn_kring(
+        qs, ents, k=k, q_key="id", e_key="qid", res=res,
+        initial_ring=1, max_ring=1, max_inline_entities=0,
+    ).toPandas()
+    exp = _numpy_knn(qpdf, epdf, k)
+    assert len(got) == len(qpdf) * k
+    for qid, grp in got.groupby("id"):
+        assert grp.sort_values("rank")["qid"].tolist() == exp[int(qid)]
+
+
+def _cosine_paths(q, corpus, k):
+    """(vec_id, rank, neighbor_id, cosine) rows of fast, blocked and
+    native, each sorted."""
+    def rows(out):
+        p = out.toPandas().sort_values(["vec_id", "rank"])
+        return list(zip(p["vec_id"], p["rank"], p["neighbor_id"], p["cosine"]))
+
+    return (
+        rows(ANN.cosine_topk_fast(q, corpus, k=k)),
+        rows(ANN.cosine_topk_blocked(q, corpus, k=k, block_rows=7)),
+        rows(ANN.cosine_topk_native(q, corpus, k=k)),
+    )
+
+
+def test_cosine_topk_ties_inside_k_match_native(spark):
+    """Exact ties straddling the k-th slot: every corpus vector appears
+    10 times under shuffled ids, so k = 5 lands inside a tie group. The
+    (cosine desc, id asc) rule keeps the 5 smallest ids of the group;
+    fast, blocked and native must agree. Queries are corpus rows (self
+    excluded, 9 ties left) and perturbed copies of the base vectors."""
+    rng = np.random.default_rng(41)
+    base = rng.standard_normal((12, 8)).astype(np.float32)
+    ids = rng.permutation(120)
+    corpus = spark.createDataFrame(
+        [(int(ids[i]), [float(x) for x in base[i % 12]]) for i in range(120)],
+        "vec_id long, embedding array<float>",
+    )
+    near = base + np.float32(0.01) * rng.standard_normal((12, 8)).astype(np.float32)
+    q = corpus.filter(F.col("vec_id") < 12).unionByName(
+        spark.createDataFrame(
+            [(1000 + j, [float(x) for x in near[j]]) for j in range(12)],
+            "vec_id long, embedding array<float>",
+        )
+    )
+    fast, blocked, native = _cosine_paths(q, corpus, 5)
+    assert len(native) == 24 * 5
+    key = lambda rows: [r[:3] for r in rows]  # noqa: E731
+    assert key(fast) == key(blocked) == key(native)
+    assert np.allclose([r[3] for r in fast], [r[3] for r in native], atol=1e-9)
+
+
+def test_cosine_topk_exclude_self_small_corpus(spark):
+    """|corpus| ≤ k with exclude_self: a query drawn from a 3-row corpus
+    has two other rows, and no path may emit its own row."""
+    corpus = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.6, 0.8]), (2, [0.0, 1.0])],
+        "vec_id long, embedding array<float>",
+    )
+    fast, blocked, native = _cosine_paths(corpus, corpus, 3)
+    assert len(native) == 3 * 2
+    assert all(v != n for v, _, n, _ in native)
+    assert fast == blocked == native
+
+
+def test_cosine_topk_block_fuzz_ties():
+    """Seeded fuzz of the shared `topk.topk_block` under the cosine
+    score `ann._cosine_score`, BIT-EXACT on (query, neighbor, cosine,
+    rank) against a numpy lexsort((ids, -S)) over the whole rounded
+    score matrix. Entries in {-1, 0, 1} and repeated corpus vectors put
+    exact ties across the k-th slot; odd trials draw the queries from
+    the corpus with exclude_self, every other one with |corpus| < 12 so
+    the excluded row falls inside the top k. No Spark needed."""
+    rng = np.random.default_rng(20261017)
+    for trial in range(64):
+        nq = int(rng.integers(1, 40))
+        ne = int(rng.integers(1, 12 if trial % 4 == 3 else 300))
+        k, dim = int(rng.integers(1, 12)), int(rng.integers(1, 6))
+        base = rng.integers(-1, 2, (max(1, ne // 8), dim)).astype(np.float32)
+        M = base[rng.integers(0, len(base), ne)]
+        ids = rng.choice(10 * ne, ne, replace=False).astype(np.int64)
+        exclude = trial % 2 == 1
+        if exclude:
+            pick = rng.integers(0, ne, nq)
+            qids, Q = ids[pick], M[pick]
+        else:
+            qids, Q = 10 * ne + np.arange(nq), base[rng.integers(0, len(base), nq)]
+        corpus = ANN._cosine_build(pd.DataFrame({"_ek": ids, "_ev": list(M)}))
+        qpdf = pd.DataFrame({"_qk": qids, "_qv": list(Q)})
+        qi, ci, c, r = T.topk_block(nq, corpus[0], k, *ANN._cosine_score(qpdf, corpus, exclude))
+        got = sorted(zip(qids[qi].tolist(), corpus[0][ci].tolist(), (-c).tolist(), r.tolist()))
+
+        order = np.argsort(ids)
+        sid, Ms = ids[order], M[order].astype(np.float64)
+        Ms /= np.maximum(np.linalg.norm(Ms, axis=1, keepdims=True), 1e-12)
+        Qd = Q.astype(np.float64)
+        Qd /= np.maximum(np.linalg.norm(Qd, axis=1, keepdims=True), 1e-12)
+        S = np.round(Qd @ Ms.T, 6)
+        exp = []
+        for i in range(nq):
+            s = S[i].copy()
+            if exclude:
+                s[sid == qids[i]] = -np.inf
+            top = [j for j in np.lexsort((sid, -s))[: min(k, ne)] if s[j] > -np.inf]
+            exp.extend((int(qids[i]), int(sid[j]), float(s[j]), n + 1) for n, j in enumerate(top))
+        assert got == sorted(exp), f"trial {trial} nq={nq} ne={ne} k={k} dim={dim}"

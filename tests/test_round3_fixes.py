@@ -13,6 +13,7 @@ from osm_wikipedia_tag_validator_spark.datagen import world as W
 from osm_wikipedia_tag_validator_spark.operators import ann as ANN
 from osm_wikipedia_tag_validator_spark.operators import audio_ops as AO
 from osm_wikipedia_tag_validator_spark.operators import images_ops as IO
+from osm_wikipedia_tag_validator_spark.operators import topk as T
 from osm_wikipedia_tag_validator_spark.operators.upsert import latest_per_key
 
 
@@ -26,21 +27,21 @@ def _embeddings(spark, n=60, dim=8):
 def test_cosine_topk_fast_over_limit_never_collects(spark, monkeypatch):
     """An over-limit corpus must never reach the driver AT ALL: the
     round-5 guard convention (unified with knn_bruteforce) decides via
-    one first() width probe + a limit(budget+1).count() — zero
-    _collect_matrix calls on the overflow path — then routes to the
+    one bounded probe — zero calls of the shared broadcast path's driver
+    pull (`topk._collect`) on the overflow path — then routes to the
     blocked cogroup plan and still returns the exact top-k."""
     df = _embeddings(spark)
     q = df.filter(F.col("vec_id") < 10)
 
-    real = ANN._collect_matrix
+    real = T._collect
     pulled = []
 
-    def spy(corpus, c_id, c_vec):
-        ids, M = real(corpus, c_id, c_vec)
-        pulled.append(len(ids))
-        return ids, M
+    def spy(side, budget):
+        pdf = real(side, budget)
+        pulled.append(len(pdf))
+        return pdf
 
-    monkeypatch.setattr(ANN, "_collect_matrix", spy)
+    monkeypatch.setattr(T, "_collect", spy)
     got = (
         ANN.cosine_topk_fast(q, df, k=3, max_inline_corpus=10)
         .toPandas()
